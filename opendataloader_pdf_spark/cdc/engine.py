@@ -99,7 +99,6 @@ class ReplayEngine:
         observe_stats: bool = False,
         pending_path: str | None = None,
         disorder_window: int = 64,
-        delta_max_events: int = 8_000_000,
         precompute_stats_max_batch: int = 4_000_000,
         reduce_strategy: str = "agg",
         broadcast_reduce_max_keys: int = 8_000_000,
@@ -121,10 +120,6 @@ class ReplayEngine:
         #: per-key window excludes invalid rows, exactly matching the
         #: filtered batches the merge actually applies).
         self.quarantine = quarantine
-        #: batch-size gate for the delta-merge fast path: its survivors
-        #: anti-join broadcasts the batch's winner KEYS (≤ distinct keys ≤
-        #: events); above this, fall back to the shuffle full-outer MERGE.
-        self.delta_max_events = delta_max_events
         #: batch-size gate for the upfront audit-stats precompute: small
         #: batches amortize the one per-key window job (each saves a
         #: per-batch stats action); huge batches don't — their cached
@@ -373,7 +368,7 @@ class ReplayEngine:
             want_stats
             and not any_patches
             and self._pending_rows() == 0
-            and hasattr(self.sink, "_merge_delta")
+            and isinstance(self.sink, ParquetMergeSink)
         )
         _mark("probe-upfront", _t)
         for b in range(start, n_batches):
@@ -480,38 +475,10 @@ class ReplayEngine:
                             }
                             for r in probe
                         ]
-                    # MERGE strategy (storage.py):
-                    #   full-outer — one wide shuffle join; right when the
-                    #     batch touches most keys of the affected buckets
-                    #     (the bench/backfill shape).
-                    #   delta — winners join + survivors broadcast
-                    #     anti-join; base streams scan→write with NO
-                    #     shuffle; right when the batch touches a small
-                    #     fraction (the steady-state 100 TB shape). Gated
-                    #     on broadcastable winner keys.
-                    delta_narrow = None
-                    base_rows = self.sink.table_rows(affected)
-                    winners = (
-                        sum(a["updated"] + a["inserted"] + a["deleted"]
-                            for a in audit_rows)
-                        if audit_rows is not None else None
-                    )
-                    use_delta = (
-                        n_events <= self.delta_max_events
-                        and hasattr(self.sink, "_merge_delta")
-                        and base_rows is not None
-                        and (winners if winners is not None else n_events)
-                        < 0.3 * base_rows
-                    )
-                    if use_delta:
-                        delta_narrow = batch.groupBy(self.sink.key).agg(
-                            F.max(self.sink.order).alias("_clsn"),
-                            F.max_by("op", F.col(self.sink.order)).alias("_cop"),
-                        )
                     stats = self.sink.merge(
                         reduced, batch_id=b, affected=affected,
                         observe_stats=self.observe_stats,
-                        delta_narrow=delta_narrow, audit_rows=audit_rows,
+                        audit_rows=audit_rows,
                     )
                     _t = _mark("reduce+merge", _t)
                     if patchable:

@@ -65,11 +65,6 @@ class IcebergSink:
     def _bucketed(self, df: DataFrame) -> DataFrame:
         return df.withColumn("bucket", self.bucket_of(self.key))
 
-    def table_rows(self, buckets=None) -> int | None:
-        """Row-count hint for the engine's merge-strategy choice; Iceberg
-        plans its own MERGE, so no hint is needed."""
-        return None
-
     def exists(self) -> bool:
         return self.spark.catalog.tableExists(self.table)
 
@@ -132,11 +127,7 @@ class IcebergSink:
         return 0
 
     def merge(self, changes: DataFrame, batch_id: int,
-              affected=None, audit_rows=None, observe_stats=False,
-              delta_narrow=None) -> dict | None:
-        # delta_narrow is the ParquetMergeSink fast path; Iceberg's own
-        # MERGE INTO already plans a comparable file-pruned merge, so the
-        # hint is accepted and ignored here.
+              affected=None, audit_rows=None, observe_stats=False) -> dict | None:
         if batch_id <= self.last_batch_id():
             return None  # already committed — exactly-once under retries
         schema = self.current_schema()

@@ -41,10 +41,38 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from opendataloader_pdf_spark.cdc.storage import (
-    ParquetMergeSink,
-    guard_audit_rows,
-)
+from opendataloader_pdf_spark.cdc.storage import ParquetMergeSink
+
+
+def guard_audit_rows(d: "DataFrame") -> list[dict]:
+    """Per-bucket lineage counters from a narrow guard frame with
+    columns (bucket, _clsn, _cop, _blsn) — one changed key per row,
+    ``_blsn`` = the key's current guard lsn (null if absent) — the
+    same counters the COW merge derives from its join flags."""
+    wins = F.col("_blsn").isNull() | (F.col("_clsn") > F.col("_blsn"))
+    was = F.col("_blsn").isNotNull()
+    dele = F.col("_cop") == "delete"
+    stats = (
+        d.groupBy("bucket")
+        .agg(
+            F.sum(F.when(wins & ~dele & was, 1).otherwise(0)).alias("updated"),
+            F.sum(F.when(wins & ~dele & ~was, 1).otherwise(0)).alias("inserted"),
+            F.sum(F.when(wins & dele, 1).otherwise(0)).alias("deleted"),
+            F.sum(F.when(~wins, 1).otherwise(0)).alias("stale"),
+            F.min("_clsn").alias("min_lsn"),
+            F.max("_clsn").alias("max_lsn"),
+        )
+        .collect()
+    )
+    return [
+        {
+            "bucket": r["bucket"],
+            "updated": r["updated"] or 0, "inserted": r["inserted"] or 0,
+            "deleted": r["deleted"] or 0, "stale": r["stale"] or 0,
+            "min_lsn": r["min_lsn"], "max_lsn": r["max_lsn"],
+        }
+        for r in stats
+    ]
 
 
 class MergeOnReadSink(ParquetMergeSink):
@@ -227,8 +255,7 @@ class MergeOnReadSink(ParquetMergeSink):
     def merge(self, changes: DataFrame, batch_id: int,
               affected: list[int] | None = None,
               audit_rows: list[dict] | None = None,
-              observe_stats: bool = False,
-              delta_narrow: DataFrame | None = None) -> dict | None:
+              observe_stats: bool = False) -> dict | None:
         m = self.manifest()
         if batch_id <= m["batch_id"]:
             return None  # already committed — exactly-once under retries
@@ -389,20 +416,3 @@ class MergeOnReadSink(ParquetMergeSink):
                              "buckets": todo, "wall_ts": time.time()})
         self._commit(m)
         return todo
-
-    def table_rows(self, buckets: list[int] | None = None) -> int | None:
-        """Stored rows incl. unresolved delta versions (upper bound on
-        resolved keys; drives nothing critical for this sink — the COW
-        delta-strategy gate does not apply)."""
-        m = self.manifest()
-        want = None if buckets is None else {str(b) for b in buckets}
-        total = 0
-        for b, ent in m["buckets"].items():
-            if want is not None and b not in want:
-                continue
-            if "rows" not in ent:
-                return None
-            total += (ent["rows"] or 0) + sum(
-                d["rows"] for d in ent.get("deltas", [])
-            )
-        return total

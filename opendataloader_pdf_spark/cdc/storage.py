@@ -14,9 +14,13 @@ exercises:
   a committed batch is a no-op (exactly-once under retries).
 * **bucket pruning** — the table is hash-bucketed on the merge key
   (``bucket = pmod(hash(doc_id), n_buckets)``); a MERGE rewrites only
-  the buckets containing changed keys. At 100 TB with 4096 buckets, a
-  batch touching 1% of keys rewrites ~1% of files (the copy-on-write
-  analog of Iceberg partition-level overwrite).
+  the buckets containing changed keys (the copy-on-write analog of
+  Iceberg partition-level overwrite). Hashing spreads keys uniformly, so
+  a batch of k changed keys touches ``n_buckets * (1 - (1 - 1/n_buckets)**k)``
+  buckets: once k exceeds the bucket count, nearly every bucket — and so
+  nearly every file — is rewritten, however small a fraction of the
+  table's keys the batch touches. Pruning pays for small batches and
+  for key-clustered ones, not for a large uniform trickle.
 * **additive schema evolution** — the manifest stores a schema per commit;
   old data files are never rewritten for a schema change; reads align
   per-file-group schemas to the current one (missing column → null,
@@ -71,39 +75,6 @@ def manifest_data_paths(m: dict) -> set[str]:
         for d in ent.get("deltas", []):
             out.add(d["path"])
     return out
-
-
-def guard_audit_rows(d: "DataFrame") -> list[dict]:
-    """Per-bucket lineage counters from a narrow guard frame with
-    columns (bucket, _clsn, _cop, _blsn) — one changed key per row,
-    ``_blsn`` = the key's current guard lsn (null if absent). The
-    SINGLE implementation of the audit-counter contract, shared by the
-    COW delta path and the MoR sink so the two can't silently diverge.
-    """
-    wins = F.col("_blsn").isNull() | (F.col("_clsn") > F.col("_blsn"))
-    was = F.col("_blsn").isNotNull()
-    dele = F.col("_cop") == "delete"
-    stats = (
-        d.groupBy("bucket")
-        .agg(
-            F.sum(F.when(wins & ~dele & was, 1).otherwise(0)).alias("updated"),
-            F.sum(F.when(wins & ~dele & ~was, 1).otherwise(0)).alias("inserted"),
-            F.sum(F.when(wins & dele, 1).otherwise(0)).alias("deleted"),
-            F.sum(F.when(~wins, 1).otherwise(0)).alias("stale"),
-            F.min("_clsn").alias("min_lsn"),
-            F.max("_clsn").alias("max_lsn"),
-        )
-        .collect()
-    )
-    return [
-        {
-            "bucket": r["bucket"],
-            "updated": r["updated"] or 0, "inserted": r["inserted"] or 0,
-            "deleted": r["deleted"] or 0, "stale": r["stale"] or 0,
-            "min_lsn": r["min_lsn"], "max_lsn": r["max_lsn"],
-        }
-        for r in stats
-    ]
 
 
 def _atomic_write(path: str, payload: str) -> None:
@@ -377,20 +348,22 @@ class ParquetMergeSink:
     def merge(self, changes: DataFrame, batch_id: int,
               affected: list[int] | None = None,
               audit_rows: list[dict] | None = None,
-              observe_stats: bool = False,
-              delta_narrow: DataFrame | None = None) -> dict | None:
+              observe_stats: bool = False) -> dict | None:
         """LSN-guarded MERGE of a reduced batch (one row per key, with an
         ``op`` column) into the table. Copy-on-write on affected buckets
-        only. Returns per-batch metrics dict, or None if the batch was
-        already committed (idempotent no-op).
+        only: one full-outer join of the changes with the affected
+        buckets' base, written bucket-aligned. Returns per-batch metrics
+        dict, or None if the batch was already committed (idempotent
+        no-op).
 
         ``changes`` may arrive pre-bucketed (a ``bucket`` column) with the
         ``affected`` bucket list already known — the replay loop learns
         both from its stats probe, saving a distinct+collect here. When
-        ``audit_rows`` (per-bucket win/stale/insert counts, computed in the
-        caller's probe via a narrow key+lsn join) is supplied, the wide
-        MERGE join runs exactly once — for the snapshot write — with no
-        cache and no second stats pass.
+        ``audit_rows`` (per-bucket win/stale/insert counts, precomputed
+        by the caller's upfront probe) is supplied, the wide MERGE join
+        runs exactly once — for the snapshot write — with no cache and no
+        second stats pass, and buckets without a winner are not
+        rewritten at all.
 
         Semantics (the reference's keep-later dedup rule, F2, as a MERGE):
           WHEN MATCHED  AND c.lsn > t.lsn AND op IN (insert,update) → UPDATE
@@ -427,9 +400,29 @@ class ParquetMergeSink:
             return {"batch_id": batch_id, "applied": 0, "deleted": 0,
                     "inserted": 0, "stale": 0, "buckets": []}
 
-        if delta_narrow is not None:
-            return self._merge_delta(ch, batch_id, affected, delta_narrow, m,
-                                     _mark, audit_rows=audit_rows)
+        sid = m["snapshot_id"] + 1
+        snap_rel = f"snap-{sid}"
+        snap_dir = os.path.join(self.data_dir, snap_rel)
+        if audit_rows is not None:
+            # per-bucket write elision: a bucket whose changes are ALL stale
+            # (no update, insert or tombstone) would be rewritten
+            # byte-identical — keep its files and only record its audit
+            # row. With no winner anywhere the commit is metadata-only
+            # (Iceberg-style): late retransmission floods touch zero data
+            # files. A skipped bucket's changes must leave the join too:
+            # with its base unread they would "win" and be written to a
+            # bucket dir that no manifest references.
+            won = {a["bucket"] for a in audit_rows
+                   if a["updated"] + a["inserted"] + a["deleted"]}
+            if not won.issuperset(affected):
+                affected = [b for b in affected if b in won]
+                ch = ch.filter(F.col("bucket").isin(affected))
+            if not affected:
+                audit = [{**row, "batch_id": batch_id, "snapshot_id": sid}
+                         for row in audit_rows]
+                self._write_audit(batch_id, audit)
+                return self._commit_snapshot(m, batch_id, sid, snap_rel,
+                                             snap_dir, [], audit)
 
         base = self.read(buckets=affected, with_bucket=True, include_deleted=True)
         # _align keeps op/bucket as pass-through extras — no re-join needed
@@ -502,9 +495,6 @@ class ParquetMergeSink:
                 ]
             out = out.observe(obs, *exprs)
 
-        sid = m["snapshot_id"] + 1
-        snap_rel = f"snap-{sid}"
-        snap_dir = os.path.join(self.data_dir, snap_rel)
         (
             out.select(*table_cols, "_deleted", *flag_cols, "bucket")
             # NO repartition: bucket_of == Spark's hashpartitioning
@@ -586,21 +576,6 @@ class ParquetMergeSink:
             if f.endswith(".parquet")
         )
 
-    def table_rows(self, buckets: list[int] | None = None) -> int | None:
-        """Stored rows (incl. tombstones) in the given buckets, from the
-        manifest — drives the engine's merge-strategy choice. None for
-        pre-rows manifests."""
-        m = self.manifest()
-        want = None if buckets is None else {str(b) for b in buckets}
-        total = 0
-        for b, ent in m["buckets"].items():
-            if want is not None and b not in want:
-                continue
-            if "rows" not in ent:
-                return None
-            total += ent["rows"]
-        return total
-
     def _commit_snapshot(self, m: dict, batch_id: int, sid: int,
                          snap_rel: str, snap_dir: str, affected: list[int],
                          audit: list[dict]) -> dict:
@@ -627,122 +602,6 @@ class ParquetMergeSink:
             "stale": sum(a["stale"] for a in audit),
             "buckets": affected,
         }
-
-    def _merge_delta(self, ch: DataFrame, batch_id: int, affected: list[int],
-                     delta_narrow: DataFrame, m: dict, _mark,
-                     audit_rows: list[dict] | None = None) -> dict:
-        """Shuffle-light MERGE for full-write (patch-free) batches.
-
-        The full-outer formulation shuffles the WHOLE base of every
-        affected bucket and caches the wide join (token arrays — measured
-        more expensive than recompute) just to tell winners from
-        survivors. This path splits the work:
-
-        * one NARROW stats job — ``delta_narrow`` (per-key max lsn +
-          winning op, built by the engine from a 3-column scan of the raw
-          batch) left-joins a 2-column base read; per-bucket
-          updated/inserted/deleted/stale/min/max lsn collect here. No
-          token array is ever read, shuffled, or cached for stats.
-        * the WINNERS write — the reduced changes join the same 2-column
-          base read (broadcast-size per AQE) and keep rows whose lsn
-          beats the base; written per bucket. The only wide shuffle left
-          is the batch reduction itself.
-        * the SURVIVORS write — base rows whose key is NOT in the winner
-          set, via a broadcast left-anti join on the narrow winner keys;
-          the base scan streams straight to the writer with NO shuffle
-          and NO sort (bucket files are read and rewritten in their
-          existing (bucket, key) order).
-
-        Equivalent output to the full-outer path (same rows, same
-        tombstones, same audit); at 100 TB the survivors path is the
-        copy-on-write bulk and it became shuffle-free. The engine gates
-        this path on batch size (broadcastable winner keys) and bucket
-        count; oversized batches fall back to the full-outer form.
-        """
-        schema = self.current_schema()
-        table_cols = [f.name for f in schema.fields]
-        sid = m["snapshot_id"] + 1
-        snap_rel = f"snap-{sid}"
-        snap_dir = os.path.join(self.data_dir, snap_rel)
-
-        base_narrow = self.read(buckets=affected, include_deleted=True).select(
-            F.col(self.key), F.col(self.order).alias("_blsn")
-        )
-        d = self._bucketed(delta_narrow).join(base_narrow, self.key, "left")
-        wins = F.col("_blsn").isNull() | (F.col("_clsn") > F.col("_blsn"))
-        was = F.col("_blsn").isNotNull()
-        dele = F.col("_cop") == "delete"
-        cached = None
-        if audit_rows is None:
-            # d is tiny (3 narrow columns, one row per changed key) —
-            # caching it is cheap and lets the stats collect and the
-            # survivors broadcast build share ONE materialization (unlike
-            # token-array frames, which are cheaper to recompute). When
-            # the engine precomputed the audit upfront (patch-free
-            # streams), no per-batch action runs here at all.
-            cached = d = d.cache()
-            audit_rows = guard_audit_rows(d)
-            _mark("delta-stats")
-        audit = [
-            {**row, "batch_id": batch_id, "snapshot_id": sid}
-            for row in audit_rows
-        ]
-
-        # per-bucket write elision: a bucket whose changes are ALL stale
-        # (no winner, no insert, no tombstone) would be rewritten
-        # byte-identical — keep its existing files and only record the
-        # audit (Iceberg-style metadata-only commit when NO bucket won).
-        # At 100 TB this is the copy-on-write amplification guard: late
-        # retransmission floods touch zero data files.
-        winner_buckets = sorted(
-            a["bucket"] for a in audit_rows
-            if (a["updated"] or 0) + (a["inserted"] or 0) + (a["deleted"] or 0) > 0
-        )
-        if not winner_buckets:
-            if cached is not None:
-                cached.unpersist()
-            self._write_audit(batch_id, audit)
-            m["snapshot_id"] = sid
-            m["batch_id"] = batch_id
-            m["commits"].append({"batch_id": batch_id, "snapshot_id": sid,
-                                 "buckets": [], "wall_ts": time.time()})
-            self._commit(m)
-            _mark("delta-skip-commit")
-            return {
-                "batch_id": batch_id, "applied": 0, "inserted": 0,
-                "deleted": 0,
-                "stale": sum(a["stale"] or 0 for a in audit),
-                "buckets": [],
-            }
-        affected = winner_buckets
-        has_base = any(str(b) in m["buckets"] for b in affected)
-
-        c = self._align(ch.drop("delivery_seq"), schema)
-        cw = c.join(d.select(self.key, "_blsn"), self.key, "left").filter(
-            F.col("_blsn").isNull() | (F.col(self.order) > F.col("_blsn"))
-        )
-        out = cw.select(
-            *table_cols,
-            (F.col("op") == "delete").alias("_deleted"),
-            "bucket",
-        ).sortWithinPartitions("bucket", self.key)  # already key-shuffled → bucket-aligned
-        if has_base:
-            win_keys = d.filter(wins).select(self.key)
-            base = self.read(buckets=affected, with_bucket=True,
-                             include_deleted=True)
-            surv = base.join(F.broadcast(win_keys), self.key, "left_anti")
-            # plain union concatenates the two legs' partitions — the
-            # survivors leg streams scan→filter→write with no shuffle and
-            # keeps its existing (bucket, key) file order
-            out = out.unionByName(surv.select(*table_cols, "_deleted", "bucket"))
-        out.write.partitionBy("bucket").mode("overwrite").parquet(snap_dir)
-        _mark("delta-write")
-        if cached is not None:
-            cached.unpersist()
-
-        self._write_audit(batch_id, audit)
-        return self._commit_snapshot(m, batch_id, sid, snap_rel, snap_dir,
-                                     affected, audit)
 
     def read_audit(self) -> DataFrame:
         if not os.path.isdir(self.audit_dir) or not os.listdir(self.audit_dir):

@@ -49,8 +49,7 @@ Scale notes
   max_by ignores rows whose ordering expression is null, so winner and
   image ride the same pass).
 * The completion join broadcasts the reduced batch against a two-column
-  pruned scan of only the affected buckets — no base shuffle, same
-  shape as the MERGE delta path.
+  pruned scan of only the affected buckets — no base shuffle.
 * No Python UDFs anywhere; everything is JVM expression work.
 """
 

@@ -453,8 +453,11 @@ def decode_avi(data: bytes) -> tuple[int, int, int, int, np.ndarray]:
         raise ValueError(
             f"movi has {len(raw_frames)} frames, header says {n_frames}"
         )
-    out = np.empty((n_frames, h, w, 3), dtype=np.uint8)
+    # every (n, h, w)-sized allocation happens only after the frames
+    # proved they hold that many pixels: the header fields are untrusted,
+    # and one flipped byte can declare a multi-GiB frame
     if compression == "mjpg":
+        imgs = []
         for i, rf in enumerate(raw_frames):
             img = decode_jpeg(bytes(rf))
             if img.shape[:2] != (h, w):
@@ -462,12 +465,16 @@ def decode_avi(data: bytes) -> tuple[int, int, int, int, np.ndarray]:
                     f"frame {i}: JPEG is {img.shape[1]}x{img.shape[0]}, "
                     f"container says {w}x{h}"
                 )
-            out[i] = img[..., None] if img.ndim == 2 else img
+            imgs.append(np.repeat(img[..., None], 3, axis=2)
+                        if img.ndim == 2 else img)
+        out = (np.stack(imgs) if imgs
+               else np.empty((0, h, w, 3), dtype=np.uint8))
         return w, h, rate, scale, out
     stride = (w * 3 + 3) & ~3
-    for i, rf in enumerate(raw_frames):  # validate BEFORE the (h,w)-sized alloc
+    for i, rf in enumerate(raw_frames):
         if len(rf) != stride * h:
             raise ValueError(f"frame {i}: {len(rf)} bytes != {stride * h}")
+    out = np.empty((n_frames, h, w, 3), dtype=np.uint8)
     for i, rf in enumerate(raw_frames):
         rows = np.frombuffer(rf, dtype=np.uint8).reshape(h, stride)
         out[i] = rows[::-1, : w * 3].reshape(h, w, 3)[:, :, ::-1]
@@ -1109,8 +1116,20 @@ def decode_jpeg(data: bytes) -> np.ndarray:
     IDCT, generic interleaved-MCU sampling (4:4:4, 4:2:0, 4:2:2 — any
     divisor sampling grid; chroma upsampled by sample replication), and
     YCbCr→RGB for 3-component scans. Returns (h, w) uint8 for
-    grayscale or (h, w, 3) uint8 RGB. Progressive (SOF2) files raise
-    ValueError (genuinely out of baseline scope)."""
+    grayscale or (h, w, 3) uint8 RGB. Progressive (SOF2) and multi-scan
+    files raise ValueError (genuinely out of baseline scope), and so
+    does every malformed payload: a missing table, a short segment or
+    an out-of-range index surfaces as ValueError, never as a bare
+    KeyError/IndexError/struct.error."""
+    import struct
+
+    try:
+        return _decode_jpeg(data)
+    except (KeyError, IndexError, struct.error) as e:
+        raise ValueError(f"malformed JPEG: {type(e).__name__}: {e}") from e
+
+
+def _decode_jpeg(data: bytes) -> np.ndarray:
     import struct
 
     if data[:2] != b"\xff\xd8":
@@ -1174,6 +1193,13 @@ def decode_jpeg(data: bytes) -> np.ndarray:
             if h is None:
                 raise ValueError("SOS before SOF0")
             ns = body[0]
+            if ns < len(comps):
+                # the remaining components would arrive in later scans;
+                # decoding this one alone would silently drop color
+                raise ValueError(
+                    f"multi-scan JPEG: SOS carries {ns} of {len(comps)} "
+                    f"SOF components"
+                )
             scan = [(body[1 + 2 * i], body[2 + 2 * i] >> 4,
                      body[2 + 2 * i] & 15) for i in range(ns)]
             segs, pos = _split_entropy(data, pos)
@@ -1191,6 +1217,15 @@ def decode_jpeg(data: bytes) -> np.ndarray:
             mcu_rows = -(-h // (8 * vmax))
             mcu_cols = -(-w // (8 * hmax))
             n_mcu = mcu_rows * mcu_cols
+            # every block costs at least 2 entropy bits (shortest DC code
+            # + shortest EOB code): bound the declared geometry by the
+            # scan's size before allocating planes for it
+            if n_mcu * sum(a * b for a, b in zip(hf, vf)) > 4 * sum(
+                    len(sg) for sg in segs):
+                raise ValueError(
+                    f"JPEG declares {w}x{h}, more blocks than its "
+                    f"entropy data can encode"
+                )
             planes = [np.empty((mcu_rows * 8 * vf[i], mcu_cols * 8 * hf[i]))
                       for i in range(ns)]
             preds = [0] * ns

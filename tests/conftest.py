@@ -3,6 +3,14 @@ from __future__ import annotations
 import os
 
 import pytest
+from hypothesis import settings
+
+# property tests draw the same examples on every run (seeded from each
+# test's own definition, no example database), so a cold checkout and a
+# warm one test exactly the same inputs; per-test @settings keep their
+# own example budgets
+settings.register_profile("derandomized", derandomize=True)
+settings.load_profile("derandomized")
 
 os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
 os.environ.setdefault("SPARK_GRAFT_SHUFFLE_PARTITIONS", "8")

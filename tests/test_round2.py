@@ -224,10 +224,14 @@ def test_finalized_sink_rejects_grown_log(spark, tmp_path):
         eng.replay(_ev(spark, grown), batch_size=10)
 
 
-def test_delta_merge_path_matches_full_outer(spark, tmp_path):
-    """Low-overlap batches route through the shuffle-free delta path
-    (winners join + survivors broadcast anti-join); its final state and
-    audit must be byte-identical to the full-outer MERGE."""
+def test_low_overlap_merge_keeps_one_file_set_per_bucket(spark, tmp_path):
+    """Low-overlap batches (a few hundred changed keys against a 3000-row
+    base) go through the one copy-on-write MERGE. Its final state and
+    audit are the same whether the engine precomputes the audit or the
+    merge derives it from the written files, and the snapshot write stays
+    bucket-aligned: no batch adds files to a bucket."""
+    import glob
+
     from pyspark.sql import functions as F  # noqa: F811
 
     from opendataloader_pdf_spark.datagen import gen_change_events
@@ -242,26 +246,34 @@ def test_delta_merge_path_matches_full_outer(spark, tmp_path):
     )
     ev.cache()
 
+    def max_files_per_bucket(sink):
+        return max(
+            len(glob.glob(f"{sink.data_dir}/{ent['path']}/*.parquet"))
+            for ent in sink.manifest()["buckets"].values()
+        )
+
     outs = {}
-    for name, delta_max in (("delta", 8_000_000), ("full", 0)):
+    for name, gate in (("precompute", 4_000_000), ("postwrite", 0)):
         sink = ParquetMergeSink(spark, str(tmp_path / name), n_buckets=4)
-        eng = ReplayEngine(spark, sink, delta_max_events=delta_max)
+        eng = ReplayEngine(spark, sink, precompute_stats_max_batch=gate)
         eng.bootstrap(base)
+        eng.replay(ev, batch_size=300, max_batches=1)
+        after_first = max_files_per_bucket(sink)
         eng.replay(ev, batch_size=300)
+        assert sink.last_batch_id() >= 2
+        assert max_files_per_bucket(sink) <= after_first
         outs[name] = (
             sorted(map(tuple, sink.read().collect())),
             sorted(
                 map(tuple, sink.read_audit()
-                    .select("bucket", "updated", "inserted", "deleted",
-                            "stale", "min_lsn", "max_lsn").collect())
+                    .select("batch_id", "bucket", "updated", "inserted",
+                            "deleted", "stale", "min_lsn", "max_lsn")
+                    .collect())
             ),
         )
     ev.unpersist()
-    assert outs["delta"][0] == outs["full"][0]
-    assert outs["delta"][1] == outs["full"][1]
-    # sanity: the delta run actually took the delta path (low overlap)
-    sink = ParquetMergeSink(spark, str(tmp_path / "delta"), n_buckets=4)
-    assert sink.table_rows() is not None and sink.table_rows() >= 3000
+    assert outs["precompute"][0] == outs["postwrite"][0]
+    assert outs["precompute"][1] == outs["postwrite"][1]
 
 
 def test_patch_stream_requires_pending_store(spark, tmp_path):

@@ -1,5 +1,6 @@
 """Round-2 engine additions: broadcast winner-fingerprint reduction,
-stale-only metadata commits, and cache-free merge stats parity."""
+stale-only metadata commits and per-bucket write elision, and cache-free
+merge stats parity."""
 
 from __future__ import annotations
 
@@ -120,3 +121,45 @@ def test_written_file_stats_match_analytic_precompute(spark, tmp_path):
             .reset_index(drop=True)
         )
     assert audits["postwrite"].equals(audits["precompute"])
+
+
+def test_partly_stale_batch_rewrites_only_winning_buckets(spark, tmp_path):
+    """With the audit precomputed, a batch whose changes in one bucket
+    all lose rewrites only the buckets that hold a winner: the losing
+    bucket keeps its files, the new snapshot writes nothing for it, and
+    its stale changes still show in the lineage."""
+    sink = ParquetMergeSink(spark, str(tmp_path / "tbl"), n_buckets=4)
+    eng = ReplayEngine(spark, sink)
+    docs = [f"d{i}" for i in range(40)]
+    base = spark.createDataFrame(
+        [(d, [1], 1, "seed", 10) for d in docs],
+        "doc_id string, tokens array<int>, n_tok int, source string, lsn long",
+    )
+    eng.bootstrap(base)
+    bucket = {
+        r["doc_id"]: r["b"] for r in
+        base.select("doc_id", sink.bucket_of("doc_id").alias("b")).collect()
+    }
+    stale_b = bucket[docs[0]]
+    assert len(set(bucket.values())) > 1
+    ev = spark.createDataFrame(
+        [(5 if bucket[d] == stale_b else 20, d, "update", [2], 1, "s", 1, i)
+         for i, d in enumerate(docs)],
+        "lsn long, doc_id string, op string, tokens array<int>, n_tok int, "
+        "source string, schema_version int, delivery_seq long",
+    ).withColumn("ts", F.current_timestamp())
+
+    before = sink.manifest()["buckets"]
+    eng.replay(ev, batch_size=100)
+    after = sink.manifest()
+
+    assert after["buckets"][str(stale_b)] == before[str(stale_b)]
+    assert all(after["buckets"][b]["path"] != ent["path"]
+               for b, ent in before.items() if b != str(stale_b))
+    snap = os.path.join(sink.data_dir, f"snap-{after['snapshot_id']}")
+    assert not os.path.exists(os.path.join(snap, f"bucket={stale_b}"))
+    got = {r["doc_id"]: r["lsn"] for r in sink.read().collect()}
+    assert got == {d: 10 if bucket[d] == stale_b else 20 for d in docs}
+    audit = {r["bucket"]: r for r in sink.read_audit().collect()}
+    assert audit[stale_b]["stale"] == sum(b == stale_b for b in bucket.values())
+    assert audit[stale_b]["updated"] == 0
