@@ -16,8 +16,8 @@ for the manifest-level delta skip:
   narrow aggregation (explode k positions → map-side-combining
   collect_set per bucket); the driver packs each set into an m-bit
   bitmap. Cost is O(batch keys), never O(table).
-* :func:`probe_positions` — the probe keys' positions via one
-  LocalTableScan job (no data-table scan).
+* :func:`probe_positions` — the probe keys' positions over a
+  driver-side LocalRelation (no Spark job, no data-table scan).
 * :func:`may_contain` — the driver-side test: all k bits set?
 
 The safety invariant is one-sided: a bloom may say "maybe" for an
@@ -36,6 +36,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from opendataloader_pdf_spark.cdc.storage import key_relation
 
 __all__ = ["position_expr", "build_blooms", "probe_positions",
            "may_contain", "pack_bitmap"]
@@ -86,14 +88,10 @@ def build_blooms(reduced: DataFrame, key: str, bits: int, k: int,
 def probe_positions(spark, keys: list, key_type, bits: int, k: int
                     ) -> dict[object, list[int]]:
     """Positions for a driver-side probe key list, computed with the
-    SAME JVM hash as the writer (one LocalTableScan job, no table
-    scan). Returns {key: [k positions]}."""
-    from pyspark.sql import types as T
-
-    kdf = spark.createDataFrame(
-        [(x,) for x in keys], T.StructType([T.StructField("k", key_type)])
-    )
-    rows = kdf.select(
+    SAME JVM hash as the writer over a LocalRelation of the keys
+    (``storage.key_relation``): no Spark job, no table scan. Returns
+    {key: [k positions]}."""
+    rows = key_relation(spark, keys, key_type).select(
         "k", position_expr(F.col("k"), bits, k).alias("ps")
     ).collect()
     return {r["k"]: list(r["ps"]) for r in rows}

@@ -154,9 +154,10 @@ class MergeOnReadSink(ParquetMergeSink):
     def _bloom_prune(self, deltas: list[dict], keys) -> list[dict]:
         """Drop candidate deltas whose bloom filter excludes EVERY probe
         key (cdc/bloom.py). Probe positions are hashed once per bloom
-        geometry with the writer's own JVM hash expression — one
-        LocalTableScan job, no table scan; deltas without a bloom are
-        conservatively kept. No-op for full scans (keys is None)."""
+        geometry with the writer's own JVM hash expression over a
+        driver-side LocalRelation — no Spark job, no table scan; deltas
+        without a bloom are conservatively kept. No-op for full scans
+        (keys is None)."""
         if keys is None or not any("bloom" in d for d in deltas):
             return deltas
         from opendataloader_pdf_spark.cdc.bloom import (

@@ -55,6 +55,29 @@ from pyspark.sql import types as T
 HEAD = "HEAD"
 
 
+def _sql_literal(key) -> str:
+    """A key as a SQL string literal (backslash and quote escaped;
+    ``None`` → ``NULL``), for a cast to the key type."""
+    if key is None:
+        return "NULL"
+    return "'" + str(key).replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def key_relation(spark: SparkSession, keys: list,
+                 key_type: T.DataType) -> DataFrame:
+    """Driver-side probe keys as a one-column frame ``k`` of the table's
+    key type, over a LocalRelation: ``VALUES`` of one escaped string
+    literal per key, cast to ``key_type`` (the cast matters —
+    ``hash(int 1) != hash(bigint 1)``). Catalyst folds a projection over
+    a LocalRelation into the relation, so collecting a hash of ``k``
+    launches no Spark job."""
+    rows = ", ".join(f"({_sql_literal(x)})" for x in keys)
+    return spark.sql(
+        f"SELECT CAST(k AS {key_type.simpleString()}) AS k "
+        f"FROM VALUES {rows} AS t(k)"
+    )
+
+
 class ConcurrentCommitError(RuntimeError):
     """Another writer moved this table's head between this operation's
     manifest read and its commit (optimistic concurrency, the CAS
@@ -279,22 +302,19 @@ class ParquetMergeSink:
         predicate pushed to parquet (files are key-sorted within buckets,
         so row-group min/max stats skip pages too).
 
-        The bucket ids come from a LocalTableScan over the key list using
-        the sink's own bucket expression — same hash, zero drift risk,
-        no data-table job."""
+        The bucket ids come from the sink's own bucket expression over a
+        driver-side LocalRelation of the keys (:func:`key_relation`) —
+        same hash as the writer, zero drift risk, and no Spark job: the
+        projection folds into the relation before execution."""
         if not keys:
             return self.read(buckets=[])
         key_type = next(
             f.dataType for f in self.current_schema().fields if f.name == self.key
         )
-        kdf = self.spark.createDataFrame(
-            [(k,) for k in keys],
-            T.StructType([T.StructField(self.key, key_type)]),
-        )
-        buckets = sorted(
-            r["b"] for r in
-            kdf.select(self.bucket_of(self.key).alias("b")).distinct().collect()
-        )
+        buckets = sorted({
+            r["b"] for r in key_relation(self.spark, keys, key_type)
+            .select(self.bucket_of("k").alias("b")).collect()
+        })
         return self._lookup_read(buckets, list(keys)).filter(
             F.col(self.key).isin(list(keys))
         )

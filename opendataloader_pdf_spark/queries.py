@@ -5174,6 +5174,7 @@ def bpe_pair_counts(spark, sf_dir):
     words AS (
       SELECT doc_id, i AS wi, ws[i] AS w
       FROM wl, unnest(range(1, len(ws) + 1)) AS r(i)
+      WHERE len(ws[i]) > 0
     ),
     chars AS (
       SELECT doc_id, wi, w, regexp_split_to_array(w, '') AS syms FROM words
@@ -5295,7 +5296,9 @@ def bpe_encode(spark, sf_dir):
                 rows["pieces_str"].append(" ".join(syms))
             yield _pd.DataFrame(rows)
 
-    enc = words.mapInPandas(encode, schema=out_schema)
+    # a blank document splits into one empty word: no word, no row
+    enc = words.filter(F.length("w") > 0).mapInPandas(encode,
+                                                       schema=out_schema)
     return enc
 
 

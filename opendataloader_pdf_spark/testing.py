@@ -3,10 +3,15 @@
 ``expected_final_state`` computes the post-replay table with plain pandas
 — no Spark, no shared code with the engine's reduction — so agreement is
 meaningful. Per-row invariant: token-array equality (BASELINE.json
-input_hint).
+input_hint). ``count_jobs`` counts the Spark jobs a block of driver code
+launches, for tests that pin a job-free control path.
 """
 
 from __future__ import annotations
+
+import uuid
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 
 import numpy as np
 import pandas as pd
@@ -101,3 +106,37 @@ def assert_states_equal(actual: pd.DataFrame, expected: pd.DataFrame) -> None:
         assert np.array_equal(ta, te), (
             f"token-array mismatch for {a['doc_id'].iloc[i]}: {ta[:8]}... vs {te[:8]}..."
         )
+
+
+_JOB_GROUP_PROPS = ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel")
+
+
+@contextmanager
+def count_jobs(spark) -> Iterator[Callable[[], int]]:
+    """Count the Spark jobs launched inside the block::
+
+        with count_jobs(spark) as jobs:
+            df = sink.lookup(keys)
+            assert jobs() == 0
+
+    The block runs under a fresh job group and ``jobs()`` returns
+    ``len(statusTracker().getJobIdsForGroup(group))`` after the listener
+    bus drains (job starts reach the status store asynchronously). A
+    unique group keeps the count exact in a long session, where the
+    status store's job list saturates at ``spark.ui.retainedJobs``. The
+    thread's previous job group is restored on exit."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    prev = {p: sc.getLocalProperty(p) for p in _JOB_GROUP_PROPS}
+
+    def jobs() -> int:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    sc.setJobGroup(group, "count_jobs")
+    try:
+        yield jobs
+    finally:
+        for p, v in prev.items():
+            sc.setLocalProperty(p, v)

@@ -81,6 +81,38 @@ def test_entry_matches_reference_loop(spark, sf_dir):
     want = {}
     for r in rows:
         for wi, w in enumerate(re.split(r"\s+", r["text"].strip()), 1):
+            if not w:  # a blank document has no word
+                continue
             p = _encode(w, ranks)
             want[(r["doc_id"], wi)] = (len(p), " ".join(p))
     assert got == want
+
+
+def test_blank_documents_emit_no_rows(spark, tmp_path):
+    """An empty and a whitespace-only document hold no word: neither the
+    Spark entry nor its DuckDB oracle emits a row for them (both split a
+    blank text into one empty string, which must not count as a word),
+    while the other documents' words keep their positions."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from opendataloader_pdf_spark.queries import QUERIES
+
+    pq.write_table(
+        pa.table({"doc_id": pa.array([1, 2, 3, 4, 5], pa.int64()),
+                  "text": ["abab ab", "", "   ", " baba  ab ", "\t \n"]}),
+        str(tmp_path / "documents.parquet"),
+    )
+    q = QUERIES["bpe_encode"]
+    cols = ["doc_id", "wi", "n_chars", "n_pieces", "pieces_str"]
+    got = sorted(tuple(r) for r in
+                 q.fn(spark, str(tmp_path)).select(*cols).collect())
+    con = duckdb.connect()
+    con.sql("CREATE VIEW documents AS SELECT * FROM "
+            f"'{tmp_path / 'documents.parquet'}'")
+    want = sorted(tuple(r) for r in con.sql(
+        f"SELECT {', '.join(cols)} FROM ({q.oracle})").fetchall())
+    assert got == want
+    assert {r[0] for r in got} == {1, 4}
+    assert [(r[0], r[1]) for r in got] == [(1, 1), (1, 2), (4, 1), (4, 2)]

@@ -3,9 +3,13 @@ per-commit changelog follower."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
+from pyspark.sql import types as T
 
 from opendataloader_pdf_spark.cdc import (
+    MergeOnReadSink,
     ParquetMergeSink,
     ReplayEngine,
     apply_changes,
@@ -13,8 +17,9 @@ from opendataloader_pdf_spark.cdc import (
     read_at,
     schema_at,
 )
+from opendataloader_pdf_spark.cdc.storage import key_relation
 from opendataloader_pdf_spark.datagen import gen_change_events
-from opendataloader_pdf_spark.testing import assert_states_equal
+from opendataloader_pdf_spark.testing import assert_states_equal, count_jobs
 
 
 @pytest.fixture(scope="module")
@@ -56,6 +61,90 @@ def test_lookup_prunes_buckets(spark, table):
     # key predicate reaches the parquet scan
     assert "PushedFilters" in plan and "In(doc_id" in plan.replace(" ", "")[
         plan.replace(" ", "").find("PushedFilters"):]
+
+
+# keys whose SQL literal needs escaping, or whose text looks like an
+# escape sequence, next to plain ones; None routes like the writer's
+# hash of NULL
+TRICKY_STRINGS = ["it's", "back\\slash", "\\u0041", "line\nbreak",
+                  "tab\there", "%_", "ünï©ødé 数据", "", "doc-1", None]
+
+
+@pytest.mark.parametrize("key_type,keys", [
+    (T.StringType(), TRICKY_STRINGS),
+    (T.IntegerType(), [0, 1, -1, 7, 2**31 - 1, -2**31, None]),
+    # hash(int 1) != hash(bigint 1): the routing must cast to the key type
+    (T.LongType(), [0, 1, -1, 7, 2**40, 2**63 - 1, -2**63, None]),
+], ids=["string", "int", "bigint"])
+def test_lookup_routes_keys_like_the_writer(spark, tmp_path, key_type, keys):
+    """The job-free routing gives every key the bucket a typed
+    createDataFrame + bucket_of reference gives it, and a lookup of the
+    keys opens exactly those buckets and returns every stored key."""
+    schema = T.StructType([T.StructField("k", key_type),
+                           T.StructField("lsn", T.LongType())])
+    stored = [x for x in keys if x is not None]
+    sink = ParquetMergeSink(spark, str(tmp_path / "t"), n_buckets=16,
+                            key="k")
+    sink.initialize(
+        spark.createDataFrame([(x, i) for i, x in enumerate(stored)], schema),
+        schema,
+    )
+    ref = [
+        r["b"] for r in
+        spark.createDataFrame([(x,) for x in keys],
+                              T.StructType([schema.fields[0]]))
+        .select(sink.bucket_of("k").alias("b")).collect()
+    ]
+    got = [
+        r["b"] for r in
+        key_relation(spark, keys, key_type)
+        .select(sink.bucket_of("k").alias("b")).collect()
+    ]
+    assert got == ref
+
+    df = sink.lookup(keys)
+    stored_buckets = {int(b) for b in sink.manifest()["buckets"]}
+    opened = {int(re.search(r"bucket=(\d+)", f).group(1))
+              for f in df.inputFiles()}
+    assert opened == set(ref) & stored_buckets
+    assert sorted(r["k"] for r in df.collect()) == sorted(stored)
+
+
+@pytest.fixture(scope="module")
+def mor_events(spark, tmp_path_factory):
+    d = tmp_path_factory.mktemp("lkp_mor")
+    gen_change_events(spark, 3_000, 300, seed=23).write.mode(
+        "overwrite"
+    ).parquet(str(d / "ev"))
+    return spark.read.parquet(str(d / "ev"))
+
+
+@pytest.mark.parametrize("layout", ["cow", "mor", "mor_bloom"])
+def test_lookup_builds_without_spark_jobs(spark, table, mor_events,
+                                          tmp_path, layout):
+    """Routing keys to buckets (and, with blooms, to delta files) is
+    driver-side: building a lookup launches no Spark job. Collecting it
+    does — which shows the counter sees jobs at all."""
+    if layout == "cow":
+        sink = table
+    else:
+        sink = MergeOnReadSink(
+            spark, str(tmp_path / layout), n_buckets=8,
+            bloom_bits=2048 if layout == "mor_bloom" else 0)
+        eng = ReplayEngine(spark, sink)
+        eng.bootstrap(None)
+        eng.replay(mor_events, batch_size=1_000)
+        deltas = [d for e in sink.manifest()["buckets"].values()
+                  for d in e.get("deltas", [])]
+        assert deltas
+        assert all(("bloom" in d) == (layout == "mor_bloom")
+                   for d in deltas)
+    keys = sorted(r["doc_id"] for r in sink.read().limit(10).collect())
+    with count_jobs(spark) as jobs:
+        df = sink.lookup(keys + ["no-such-doc"])
+        assert jobs() == 0
+        assert sorted(r["doc_id"] for r in df.collect()) == keys
+        assert jobs() >= 1
 
 
 def test_follow_changes_replicates_history(spark, table, tmp_path):
