@@ -109,7 +109,10 @@ class MergeOnReadSink(ParquetMergeSink):
         no version of them — skipping it cannot change the LWW fold for
         those keys. Base files are never skipped (they anchor the
         bucket), and deltas without recorded stats (older manifests)
-        are conservatively kept."""
+        are conservatively kept. A ``None`` key matches no row, so it
+        selects no delta."""
+        if keys is not None:
+            keys = [k for k in keys if k is not None]
         m = self.manifest()
         schema = self.current_schema()
         want = None if buckets is None else {str(b) for b in buckets}
@@ -157,8 +160,12 @@ class MergeOnReadSink(ParquetMergeSink):
         geometry with the writer's own JVM hash expression over a
         driver-side LocalRelation — no Spark job, no table scan; deltas
         without a bloom are conservatively kept. No-op for full scans
-        (keys is None)."""
-        if keys is None or not any("bloom" in d for d in deltas):
+        (keys is None); no delta holds a version of an empty key list."""
+        if keys is None:
+            return deltas
+        if not keys:
+            return []
+        if not any("bloom" in d for d in deltas):
             return deltas
         from opendataloader_pdf_spark.cdc.bloom import (
             may_contain,

@@ -25,6 +25,10 @@ exercises:
   old data files are never rewritten for a schema change; reads align
   per-file-group schemas to the current one (missing column → null,
   int32 → int64 widening by cast).
+* **no storage listing beyond the manifest** — reads name the manifest's
+  leaf dirs (one per bucket file set, plus MoR deltas) as root paths,
+  and the session (``session.get_spark``) has Spark list up to 4096 of
+  them on the driver instead of in a distributed listing job.
 
 Layout::
 
@@ -76,6 +80,17 @@ def key_relation(spark: SparkSession, keys: list,
         f"SELECT CAST(k AS {key_type.simpleString()}) AS k "
         f"FROM VALUES {rows} AS t(k)"
     )
+
+
+def key_in(key: str, keys: list, key_type: T.DataType) -> "F.Column":
+    """``key IN (…)`` over the same escaped literals as
+    :func:`key_relation`, each cast to ``key_type``: one SQL expression
+    parsed in one py4j call, where ``F.col(key).isin(keys)`` makes one
+    call per key. The cast folds away, so parquet still gets an ``In``
+    pushed filter."""
+    t = key_type.simpleString()
+    lits = ", ".join(f"CAST({_sql_literal(x)} AS {t})" for x in keys)
+    return F.expr(f"`{key}` IN ({lits})")
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -305,7 +320,8 @@ class ParquetMergeSink:
         The bucket ids come from the sink's own bucket expression over a
         driver-side LocalRelation of the keys (:func:`key_relation`) —
         same hash as the writer, zero drift risk, and no Spark job: the
-        projection folds into the relation before execution."""
+        projection folds into the relation before execution. The key
+        predicate is one SQL ``IN`` list (:func:`key_in`)."""
         if not keys:
             return self.read(buckets=[])
         key_type = next(
@@ -316,7 +332,7 @@ class ParquetMergeSink:
             .select(self.bucket_of("k").alias("b")).collect()
         })
         return self._lookup_read(buckets, list(keys)).filter(
-            F.col(self.key).isin(list(keys))
+            key_in(self.key, keys, key_type)
         )
 
     def _lookup_read(self, buckets: list[int], keys: list) -> DataFrame:

@@ -7,6 +7,9 @@ Scale posture (100 TB / 1000-executor design, tested on local[N]):
   batches (input_hint mandates vectorized token-array ops).
 * shuffle partitions sized from parallelism locally; on a real cluster AQE
   coalesces from a deliberately high initial number.
+* table reads list their paths on the driver — the sinks' manifests name
+  every leaf dir a read needs, so a read of up to 4096 paths launches no
+  listing job; Spark's distributed listing only takes over above that.
 * Iceberg catalog wired in when the runtime jar is present (detected), so
   the same code runs MERGE INTO on a cluster; the sandbox falls back to the
   parquet merge sink (storage.py).
@@ -66,6 +69,12 @@ def get_spark(
         # files: keep scan partitions bounded so a 100TB read doesn't
         # explode task count; AQE coalesces small ones.
         .config("spark.sql.files.maxPartitionBytes", "256m")
+        # sinks read the manifest's leaf dirs by name (16 base + 32 delta
+        # dirs for a 16-bucket MoR read with 2 deltas); above 32 root
+        # paths Spark would list them in a distributed job, which cost
+        # more than driver listing at every size measured, up to 4096
+        # local dirs (BENCH/LISTING.md)
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "4096")
     )
     if iceberg_available():
         warehouse = os.environ.get("SPARK_ICEBERG_WAREHOUSE", "/tmp/iceberg_warehouse")

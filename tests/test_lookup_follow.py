@@ -1,11 +1,12 @@
-"""Point lookups (bucket-pruned + pushed key predicate) and the
-per-commit changelog follower."""
+"""Point lookups (bucket-pruned + pushed key predicate), job-free read
+building, and the per-commit changelog follower."""
 
 from __future__ import annotations
 
 import re
 
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from opendataloader_pdf_spark.cdc import (
@@ -17,8 +18,8 @@ from opendataloader_pdf_spark.cdc import (
     read_at,
     schema_at,
 )
-from opendataloader_pdf_spark.cdc.storage import key_relation
-from opendataloader_pdf_spark.datagen import gen_change_events
+from opendataloader_pdf_spark.cdc.storage import key_relation, manifest_data_paths
+from opendataloader_pdf_spark.datagen import gen_change_events, gen_documents
 from opendataloader_pdf_spark.testing import assert_states_equal, count_jobs
 
 
@@ -65,30 +66,56 @@ def test_lookup_prunes_buckets(spark, table):
 
 # keys whose SQL literal needs escaping, or whose text looks like an
 # escape sequence, next to plain ones; None routes like the writer's
-# hash of NULL
-TRICKY_STRINGS = ["it's", "back\\slash", "\\u0041", "line\nbreak",
-                  "tab\there", "%_", "ünï©ødé 数据", "", "doc-1", None]
+# hash of NULL, and comes first so that a delta range check meets it
+# before any stored key
+TRICKY_STRINGS = [None, "it's", "back\\slash", "\\u0041", "line\nbreak",
+                  "tab\there", "%_", "ünï©ødé 数据", "", "doc-1"]
 
 
-@pytest.mark.parametrize("key_type,keys", [
-    (T.StringType(), TRICKY_STRINGS),
-    (T.IntegerType(), [0, 1, -1, 7, 2**31 - 1, -2**31, None]),
+KEY_CASES = [
+    ("string", T.StringType(), TRICKY_STRINGS),
+    ("int", T.IntegerType(), [None, 0, 1, -1, 7, 2**31 - 1, -2**31]),
     # hash(int 1) != hash(bigint 1): the routing must cast to the key type
-    (T.LongType(), [0, 1, -1, 7, 2**40, 2**63 - 1, -2**63, None]),
-], ids=["string", "int", "bigint"])
-def test_lookup_routes_keys_like_the_writer(spark, tmp_path, key_type, keys):
+    ("bigint", T.LongType(),
+     [None, 0, 1, -1, 7, 2**40, 2**63 - 1, -2**63]),
+]
+
+
+@pytest.mark.parametrize("layout,key_type,keys", [
+    pytest.param(layout, key_type, keys,
+                 id=name if layout == "cow" else f"{name}-{layout}")
+    for layout in ("cow", "mor", "mor_bloom")
+    for name, key_type, keys in KEY_CASES
+])
+def test_lookup_routes_keys_like_the_writer(spark, tmp_path, layout,
+                                            key_type, keys):
     """The job-free routing gives every key the bucket a typed
     createDataFrame + bucket_of reference gives it, and a lookup of the
-    keys opens exactly those buckets and returns every stored key."""
+    keys opens exactly those buckets and returns every stored key — on
+    MoR tables too, where the keys also prune delta files by key range
+    (and by bloom) and a None key must select no delta."""
     schema = T.StructType([T.StructField("k", key_type),
                            T.StructField("lsn", T.LongType())])
     stored = [x for x in keys if x is not None]
-    sink = ParquetMergeSink(spark, str(tmp_path / "t"), n_buckets=16,
-                            key="k")
-    sink.initialize(
-        spark.createDataFrame([(x, i) for i, x in enumerate(stored)], schema),
-        schema,
-    )
+    base = spark.createDataFrame([(x, i) for i, x in enumerate(stored)],
+                                 schema)
+    if layout == "cow":
+        sink = ParquetMergeSink(spark, str(tmp_path / "t"), n_buckets=16,
+                                key="k")
+    else:
+        sink = MergeOnReadSink(
+            spark, str(tmp_path / "t"), n_buckets=16, key="k",
+            bloom_bits=256 if layout == "mor_bloom" else 0)
+    sink.initialize(base, schema)
+    if layout != "cow":
+        # every stored key gets a newer version in one delta per bucket
+        sink.merge(base.select("k", (F.col("lsn") + 100).alias("lsn"),
+                               F.lit("update").alias("op")), batch_id=1)
+        deltas = [d for e in sink.manifest()["buckets"].values()
+                  for d in e.get("deltas", [])]
+        assert deltas and all("key_min" in d for d in deltas)
+        assert all(("bloom" in d) == (layout == "mor_bloom")
+                   for d in deltas)
     ref = [
         r["b"] for r in
         spark.createDataFrame([(x,) for x in keys],
@@ -145,6 +172,33 @@ def test_lookup_builds_without_spark_jobs(spark, table, mor_events,
         assert jobs() == 0
         assert sorted(r["doc_id"] for r in df.collect()) == keys
         assert jobs() >= 1
+
+
+@pytest.mark.parametrize("layout", ["cow64", "mor16"])
+def test_read_builds_without_spark_jobs(spark, mor_events, tmp_path,
+                                        layout):
+    """A read names the manifest's leaf dirs, and the session lists them
+    on the driver: building a read of more than 32 paths (Spark's default
+    distributed-listing threshold) launches no Spark job."""
+    base = gen_documents(spark, 2_000, seed=23)
+    if layout == "cow64":
+        sink = ParquetMergeSink(spark, str(tmp_path / layout), n_buckets=64)
+        ReplayEngine(spark, sink).bootstrap(base)
+        reads = [sink.read]
+    else:
+        sink = MergeOnReadSink(spark, str(tmp_path / layout), n_buckets=16)
+        eng = ReplayEngine(spark, sink)
+        eng.bootstrap(base)
+        eng.replay(mor_events, batch_size=1_000, max_batches=2)
+        reads = [sink.read, sink.read_raw]
+    n_paths = len(manifest_data_paths(sink.manifest()))
+    assert n_paths == (48 if layout == "mor16" else 64)
+    for read in reads:
+        with count_jobs(spark) as jobs:
+            df = read()
+            assert jobs() == 0
+            assert df.count() > 0
+            assert jobs() >= 1
 
 
 def test_follow_changes_replicates_history(spark, table, tmp_path):
